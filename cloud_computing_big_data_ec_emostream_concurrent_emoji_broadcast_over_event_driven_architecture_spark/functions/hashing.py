@@ -60,40 +60,16 @@ def _universal_hash(a: int, b: int):
 
 def minhash_signature(hashed_shingles: Column) -> Column:
     """Array of NUM_HASHES minhash values over an array<long> of shingle
-    hashes, as ONE aggregate fold (round-11 optimization): the old form
-    was NUM_HASHES independent ``array_min(transform(...))`` expressions
-    — 16 passes over the shingle array, 16 temp arrays, and 16 separate
-    evaluator trees to first-touch-JIT (the dominant slice of the bench's
-    cold ``cache_build``). The fold makes one pass, updating all 16
-    running minima per element against the constant-folded (a, b) table.
-    Values are bit-identical for NON-EMPTY input — ``least`` chains are
-    exactly ``array_min``, and ``(a*h+b) % P`` is the same ANSI-safe
-    integer arithmetic (pinned by tests/test_round11_opt.py). Every call
-    site filters ``size(hs) > 0`` first (empty sets can join no pair);
-    an empty array would yield the MAX_LONG seeds where the old form
-    gave nulls."""
-    ab = F.array(
+    hashes. Pure built-ins: transform + array_min per hash function, so
+    an empty shingle array gives NUM_HASHES nulls (``array_min`` of an
+    empty array), whatever the call site filters. A single aggregate
+    fold over all 16 minima measured about 1.5x slower in executor work
+    and gave MAX_LONG seeds on empty input, so it is not used."""
+    return F.array(
         *[
-            F.struct(
-                F.lit(a).cast("long").alias("a"),
-                F.lit(b).cast("long").alias("b"),
-            )
+            F.array_min(F.transform(hashed_shingles, _universal_hash(a, b)))
             for a, b in MINHASH_AB
         ]
-    )
-    seed = F.array_repeat(
-        F.lit((1 << 63) - 1).cast("long"), NUM_HASHES
-    )
-    return F.aggregate(
-        hashed_shingles,
-        seed,
-        lambda acc, h: F.zip_with(
-            acc,
-            ab,
-            lambda m, c: F.least(
-                m, (c["a"] * h + c["b"]) % F.lit(MERSENNE_P)
-            ),
-        ),
     )
 
 

@@ -1841,43 +1841,6 @@ def _pq_dist_cols(dialect: str) -> list[str]:
     return cols
 
 
-def _pq_sq_col(va: str, vb: str, lo: int, hi: int) -> Column:
-    """Squared L2 over dims [lo, hi] as a zip_with/aggregate fold —
-    BIT-EQUAL to :func:`_pq_sq`'s unrolled left-associated sum that the
-    DuckDB oracle evaluates: the fold adds the same squared terms in the
-    same left-to-right order, and its +0.0 seed is exact because a
-    square is never -0.0 (0.0 + t == t for every t ≥ 0 in IEEE 754)."""
-    n = hi - lo + 1
-    return F.aggregate(
-        F.zip_with(
-            F.slice(F.col(va), lo, n),
-            F.slice(F.col(vb), lo, n),
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _pq_dist_cols_spark() -> list[Column]:
-    """The Spark twin of ``_pq_dist_cols`` built as COLUMNS, not parsed
-    SQL strings. The unrolled string form expands to ~2.3k expression
-    nodes across 65 projections — measured ~6.7 s of analysis plus a
-    whole-stage-codegen body big enough to hurt (exec 2.3 s vs 0.3 s on
-    the same 2k-row scan); the fold form is one nested higher-order
-    expression per column, same values bit-for-bit (pinned by
-    tests/test_round8_ops.py::test_pq_fold_equals_unrolled_strings)."""
-    cols = []
-    for s in range(PQ_M):
-        lo, hi = s * PQ_SUB + 1, (s + 1) * PQ_SUB
-        for k in range(PQ_K):
-            cols.append(_pq_sq_col("embedding", f"a{k}", lo, hi).alias(f"d{s}_{k}"))
-            cols.append(_pq_sq_col("qe", f"a{k}", lo, hi).alias(f"g{s}_{k}"))
-    cols.append(_pq_sq_col("embedding", "qe", 1, PCA_DIM).alias("ex"))
-    return cols
-
-
 def _pq_adc_expr() -> str:
     """Per-subspace: pick the ADC table entry of the argmin centroid
     (<= comparisons -> smallest-k tie-break), sum across subspaces.
@@ -2105,27 +2068,18 @@ def _pqt_ctes(prefix: str = "pq", src: str | None = None) -> str:
 def _pqt_sq(dialect: str, vec: str, cw: str, lo: int) -> str:
     """Squared L2 between ``vec`` dims [lo, lo+PQ_SUB-1] and the
     PQ_SUB-dim codeword list ``cw`` — identical term order in both
-    dialects (the trained twin of :func:`_pq_sq`)."""
+    dialects (the trained twin of :func:`_pq_sq`). Spark's ``[]`` is
+    0-based, so its codeword reads go through 1-based ``element_at``."""
+
+    def c(i: int) -> str:
+        return f"{cw}[{i}]" if dialect == "duck" else f"element_at({cw}, {i})"
+
     terms = [
-        f"({_pq_elem(dialect, vec, lo + i)} - {cw}[{i + 1}])"
-        f" * ({_pq_elem(dialect, vec, lo + i)} - {cw}[{i + 1}])"
+        f"({_pq_elem(dialect, vec, lo + i)} - {c(i + 1)})"
+        f" * ({_pq_elem(dialect, vec, lo + i)} - {c(i + 1)})"
         for i in range(PQ_SUB)
     ]
     return "(" + " + ".join(terms) + ")"
-
-
-def _pqt_sq_col(vec: str, cw: str, lo: int) -> Column:
-    """Spark fold twin of :func:`_pqt_sq` — bit-equal by the +0.0-seed
-    square-terms argument (see :func:`_pq_sq_col`)."""
-    return F.aggregate(
-        F.zip_with(
-            F.slice(F.col(vec), lo, PQ_SUB),
-            F.col(cw),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
 
 
 def _pqt_dist_cols(dialect: str) -> list[str]:
@@ -2145,17 +2099,6 @@ def _pqt_dist_cols(dialect: str) -> list[str]:
     return cols
 
 
-def _pqt_dist_cols_spark() -> list[Column]:
-    cols = []
-    for s in range(PQ_M):
-        lo = s * PQ_SUB + 1
-        for k in range(PQ_K):
-            cols.append(_pqt_sq_col("embedding", f"c{s}_{k}", lo).alias(f"d{s}_{k}"))
-            cols.append(_pqt_sq_col("qe", f"c{s}_{k}", lo).alias(f"g{s}_{k}"))
-    cols.append(_pq_sq_col("embedding", "qe", 1, PCA_DIM).alias("ex"))
-    return cols
-
-
 # --- packed PQ scoring (round-11 optimization) -------------------------------
 # The unrolled d{s}_{k}/g{s}_{k} column fan-out (2×PQ_M×PQ_K = 64 fold
 # columns per scoring relation, plus the <=-chain ADC CASE and the
@@ -2169,10 +2112,10 @@ def _pqt_dist_cols_spark() -> list[Column]:
 # codebook as ONE array<array<array<double>>> column and computes each
 # subspace's (min distance, selected ADC entry) in a single
 # transform+fold, so a scoring relation is PQ_M struct expressions
-# instead of 64 named columns. Bit-equality with the unrolled oracle
-# SQL is pinned by tests/test_round11_opt.py. The unrolled builders
-# above remain the oracle-side (DuckDB) template and the pinned
-# cross-check surface.
+# instead of 64 named columns. The packed folds are the only Spark
+# scoring form; the unrolled string builders above are the DuckDB
+# oracle's template, and tests/test_round11_opt.py pins the packed
+# folds bit-equal to those same strings evaluated by Spark.
 
 
 def _sq_fold_sql(a: str, b: str) -> str:
@@ -2180,7 +2123,7 @@ def _sq_fold_sql(a: str, b: str) -> str:
     shared inner loop of every PQ distance, as Spark SQL text. Same
     left-to-right term order as the unrolled oracle SQL; the 0.0D seed
     is exact because a square is never -0.0; the double casts are exact
-    (float widening) or no-ops, matching ``_pq_sq_col``/``_pqt_sq_col``.
+    (float widening) or no-ops, matching the oracle's ``_pq_sq``/``_pqt_sq``.
     Text instead of Column calls because each python-lambda Column costs
     dozens of py4j round trips — building the 16 per-subspace folds as
     Columns measured ~1.0 s of pure driver time per scoring relation,
@@ -2276,7 +2219,7 @@ def _pq_packed_rec_sql(vec: str, cb: str = "cb") -> str:
 
 def _pq_packed_ex_sql(vec: str, qvec: str) -> str:
     """Full-vector exact squared L2 (the ``ex`` audit column) — the
-    same fold ``_pq_sq_col(vec, qvec, 1, PCA_DIM)`` builds, as text."""
+    sum the unrolled ``_pq_sq(dialect, vec, qvec, 1, PCA_DIM)`` spells out."""
     return _sq_fold_sql(
         f"slice({vec}, 1, {PCA_DIM})", f"slice({qvec}, 1, {PCA_DIM})"
     )
@@ -5268,21 +5211,6 @@ def _pqr_dist_cols(dialect: str) -> list[str]:
                 f"{_pqt_sq(dialect, 'qrv', f'c{s}_{k}', lo)} AS g{s}_{k}"
             )
     cols.append(f"{_pq_sq(dialect, 'embedding', 'qe', 1, PCA_DIM)} AS ex")
-    return cols
-
-
-def _pqr_dist_cols_spark() -> list[Column]:
-    cols = []
-    for s in range(PQ_M):
-        lo = s * PQ_SUB + 1
-        for k in range(PQ_K):
-            cols.append(
-                _pqt_sq_col("rv", f"c{s}_{k}", lo).alias(f"d{s}_{k}")
-            )
-            cols.append(
-                _pqt_sq_col("qrv", f"c{s}_{k}", lo).alias(f"g{s}_{k}")
-            )
-    cols.append(_pq_sq_col("embedding", "qe", 1, PCA_DIM).alias("ex"))
     return cols
 
 

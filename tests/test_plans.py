@@ -133,12 +133,14 @@ def test_merge_upsert_no_extra_exchange_after_compaction(spark, sf_dir):
     assert "SortMergeJoin" in plan and "FullOuter" in plan
 
 
-def test_anomaly_broadcasts_moments(spark, sf_dir):
-    """q_events_anomaly joins the per-type moments back via broadcast —
-    the fact table shuffles once (minute counts), never for the join."""
+def test_anomaly_single_scan_no_join(spark, sf_dir):
+    """q_events_anomaly reads the per-type moments off a window over the
+    minute counts — no join back of any strategy, exactly one scan."""
     plan = _plan(spark, sf_dir, "q_events_anomaly")
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    for node in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
+                 "CartesianProduct"):
+        assert node not in plan
+    assert plan.count("FileScan parquet") == 1
 
 
 def test_quantize_broadcasts_stats_row(spark, sf_dir):
@@ -802,11 +804,13 @@ def test_embedding_dq_single_scan_no_joins(spark, sf_dir):
 
 def test_chi_square_windows_over_cells_only(spark, sf_dir):
     """Chi-square: the contingency marginals are windows over the r×c
-    cell table, never the fact — no joins except the 1-row dims
-    broadcast."""
+    cell table, never the fact, and the table dims fold into the 1-row
+    rollup over the same cells — no joins, one scan."""
     plan = _plan(spark, sf_dir, "q_chi_square_independence")
-    assert "SortMergeJoin" not in plan
-    assert plan.count("FileScan parquet") == 2  # cells + dims aggs
+    for node in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
+                 "BroadcastNestedLoopJoin", "CartesianProduct"):
+        assert node not in plan
+    assert plan.count("FileScan parquet") == 1
 
 
 def test_gini_single_rank_over_key_aggregate(spark, sf_dir):

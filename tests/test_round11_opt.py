@@ -1,5 +1,5 @@
 """Round-11 optimization pins: packed PQ scoring must be bit-equal to
-the unrolled column form the DuckDB oracles still evaluate."""
+the unrolled SQL the DuckDB oracles evaluate, run through Spark."""
 
 from __future__ import annotations
 
@@ -15,7 +15,7 @@ from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event
 
 def _wide_ref(dists, adc_alias="adc"):
     """(vec_id, adc, rec, ex) from an unrolled d/g/ex relation — the
-    pre-round-11 readout expressions over the named columns."""
+    oracle's readout expressions over the named columns."""
     rec = F.least(*[F.col(f"d0_{k}") for k in range(S.PQ_K)])
     for s in range(1, S.PQ_M):
         rec = rec + F.least(*[F.col(f"d{s}_{k}") for k in range(S.PQ_K)])
@@ -29,9 +29,9 @@ def _wide_ref(dists, adc_alias="adc"):
 
 def test_packed_trained_scoring_bit_equals_unrolled(spark, sf_dir):
     """adc/rec/ex from the round-11 packed index-aware folds must be
-    BIT-equal (compared with !=, no tolerance) to the unrolled
-    d{s}_{k}/g{s}_{k} column form over the whole fixture, for the
-    trained codebook."""
+    BIT-equal (compared with !=, no tolerance) to the oracle's unrolled
+    d{s}_{k}/g{s}_{k} SQL over the whole fixture, for the trained
+    codebook."""
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cbp = S._pq_trained_codebook(spark, sf_dir)
     q_row = emb.filter(F.col("vec_id") == 0).select(
@@ -48,7 +48,7 @@ def test_packed_trained_scoring_bit_equals_unrolled(spark, sf_dir):
     ref = _wide_ref(
         emb.crossJoin(F.broadcast(cbp))
         .crossJoin(F.broadcast(q_row))
-        .select("vec_id", *S._pqt_dist_cols_spark())
+        .select("vec_id", *[F.expr(c) for c in S._pqt_dist_cols("spark")])
     )
     j = packed.alias("p").join(ref.alias("r"), "vec_id")
     bad = j.filter(
@@ -86,7 +86,7 @@ def test_packed_anchor_scoring_bit_equals_unrolled(spark, sf_dir):
     ref = _wide_ref(
         emb.crossJoin(F.broadcast(anchors))
         .crossJoin(F.broadcast(q_row))
-        .select("vec_id", *S._pq_dist_cols_spark())
+        .select("vec_id", *[F.expr(c) for c in S._pq_dist_cols("spark")])
     )
     j = packed.alias("p").join(ref.alias("r"), "vec_id")
     bad = j.filter(
@@ -97,40 +97,54 @@ def test_packed_anchor_scoring_bit_equals_unrolled(spark, sf_dir):
     assert bad == 0
 
 
-def test_minhash_fold_bit_equals_per_hash_array_mins(spark, sf_dir):
-    """The round-11 single-fold minhash signature must be bit-equal to
-    the old 16x array_min(transform(...)) form over every non-empty
-    fixture shingle set (the precondition every call site enforces)."""
+def test_minhash_signature_bit_equals_duckdb_oracle(spark, sf_dir, duck):
+    """The Spark signature of every non-empty fixture shingle set equals
+    DuckDB's ``minhash_signature_sql`` over the same hashes, exactly."""
     from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.functions.hashing import (
-        MINHASH_AB,
-        _universal_hash,
-        md5_long,
         minhash_signature,
+        minhash_signature_sql,
     )
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.functions.text import (
-        shingles,
-        tokens,
+    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.operators.dedup import (
+        _HS_CTE,
+    )
+    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.minhash import (
+        hashed_shingle_set,
     )
 
-    docs = table(spark, sf_dir, "documents")
-    hs = F.array_distinct(
-        F.transform(shingles(tokens(F.col("text"))), md5_long)
+    got = {
+        r["doc_id"]: list(r["sig"])
+        for r in table(spark, sf_dir, "documents")
+        .select("doc_id", hashed_shingle_set("text").alias("hs"))
+        .filter(F.size("hs") > 0)
+        .select("doc_id", minhash_signature(F.col("hs")).alias("sig"))
+        .collect()
+    }
+    sig_sql = ", ".join(minhash_signature_sql("h"))
+    want = {
+        r[0]: list(r[1:])
+        for r in duck.execute(
+            f"WITH {_HS_CTE} SELECT doc_id, {sig_sql} FROM sh GROUP BY doc_id"
+        ).fetchall()
+    }
+    assert got  # non-degenerate
+    assert got == want
+
+
+def test_minhash_signature_of_empty_set_is_all_null(spark):
+    """An empty shingle set has a defined signature: NUM_HASHES nulls
+    (``array_min`` of an empty array), whether or not the call site
+    filters ``size(hs) > 0``."""
+    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.functions.hashing import (
+        NUM_HASHES,
+        minhash_signature,
     )
-    base = docs.select("doc_id", hs.alias("hs")).filter(F.size("hs") > 0)
-    old = F.array(
-        *[
-            F.array_min(F.transform(F.col("hs"), _universal_hash(a, b)))
-            for a, b in MINHASH_AB
-        ]
+
+    sig = (
+        spark.createDataFrame([([],)], "hs array<long>")
+        .select(minhash_signature(F.col("hs")).alias("sig"))
+        .collect()[0]["sig"]
     )
-    bad = (
-        base.select(
-            minhash_signature(F.col("hs")).alias("new"), old.alias("old")
-        )
-        .filter(F.col("new") != F.col("old"))
-        .count()
-    )
-    assert bad == 0
+    assert sig == [None] * NUM_HASHES
 
 
 def test_packed_adc_tie_break_prefers_smallest_k(spark):

@@ -213,50 +213,6 @@ def test_ivf_index_stats_audits_the_real_index(spark, sf_dir):
     )
 
 
-def test_pq_fold_equals_unrolled_strings(spark, sf_dir):
-    """The Column-built zip_with/aggregate PQ distance fold must be
-    BIT-equal (not approximately equal) to the unrolled string form the
-    DuckDB oracles still evaluate — same squared terms, same
-    left-to-right association, exact +0.0 seed. Every d/g/ex column over
-    the whole fixture, compared with != (no tolerance)."""
-    from pyspark.sql import functions as F2
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.catalog import (
-        table,
-    )
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.operators.similarity import (
-        PQ_K,
-        _pq_dist_cols,
-        _pq_dist_cols_spark,
-    )
-
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    anchors = emb.filter(F2.col("vec_id") < PQ_K).groupBy().agg(
-        *[
-            F2.max(
-                F2.when(F2.col("vec_id") == k, F2.col("embedding"))
-            ).alias(f"a{k}")
-            for k in range(PQ_K)
-        ]
-    )
-    q_row = emb.filter(F2.col("vec_id") == 0).select(
-        F2.col("embedding").alias("qe")
-    )
-    base = emb.crossJoin(F2.broadcast(anchors)).crossJoin(F2.broadcast(q_row))
-    unrolled = base.select(
-        "vec_id", *[F2.expr(c) for c in _pq_dist_cols("spark")]
-    )
-    fold = base.select("vec_id", *_pq_dist_cols_spark())
-    assert unrolled.columns == fold.columns
-    joined = unrolled.alias("u").join(fold.alias("f"), "vec_id")
-    mismatch = None
-    for c in unrolled.columns:
-        if c == "vec_id":
-            continue
-        cond = F2.col(f"u.{c}") != F2.col(f"f.{c}")
-        mismatch = cond if mismatch is None else (mismatch | cond)
-    assert joined.filter(mismatch).count() == 0
-
-
 def test_index_append_covers_delta_and_coassigns_duplicates(spark, tmp_path):
     """The append path must (a) assign EVERY delta vector exactly once,
     (b) choose only centroids that exist in the base-trained index, and

@@ -389,6 +389,40 @@ def test_stateful_running_stats_equals_batch(spark, events_df, replay_dir):
         assert last[k][1] == pytest.approx(total, rel=1e-9)
 
 
+def _ttl_batches_dir(sess, events_df, tmp_path):
+    """3 scripted micro-batches: key 'a' goes idle after batch 1 while
+    'b' keeps advancing the watermark past a's last activity + ttl."""
+    import datetime as _dt
+
+    rows = events_df.limit(0)
+    mk = lambda i, typ, minute: (  # noqa: E731
+        i,
+        _dt.datetime(2024, 1, 1, 12, minute, 0),
+        1,
+        typ,
+        1.0,
+    )
+    batches = [
+        [mk(1, "a", 0), mk(2, "b", 0)],
+        [mk(3, "b", 30)],
+        [mk(4, "b", 59)],
+    ]
+    flat = tmp_path / f"ttlflat_{uuid.uuid4().hex[:8]}"
+    flat.mkdir()
+    out = tmp_path / f"ttl_{uuid.uuid4().hex[:8]}"
+    out.mkdir()
+    idx = 0
+    for i, batch in enumerate(batches):
+        sess.createDataFrame(batch, rows.schema).coalesce(1).write.parquet(
+            str(out / f"b{i}")
+        )
+    for sub in sorted(out.iterdir()):
+        for f in sorted(sub.glob("*.parquet")):
+            f.rename(flat / f"{idx:02d}.parquet")
+            idx += 1
+    return str(flat), rows.schema
+
+
 def test_stateful_ttl_evicts_idle_keys(spark, events_df, tmp_path):
     """Event-time TTL: a key that stops sending is evicted once the
     watermark passes its last activity + ttl, emitting a final
@@ -398,36 +432,10 @@ def test_stateful_ttl_evicts_idle_keys(spark, events_df, tmp_path):
         running_key_stats,
     )
 
-    rows = events_df.limit(0)  # schema only
-    sess = events_df.sparkSession
-    mk = lambda i, typ, minute: (  # noqa: E731
-        i,
-        __import__("datetime").datetime(2024, 1, 1, 12, minute, 0),
-        1,
-        typ,
-        1.0,
+    directory, schema = _ttl_batches_dir(
+        events_df.sparkSession, events_df, tmp_path
     )
-    # batch 1: both keys active; batches 2-3: only 'b' keeps sending,
-    # advancing the watermark far past a's last activity + ttl
-    batches = [
-        [mk(1, "a", 0), mk(2, "b", 0)],
-        [mk(3, "b", 30)],
-        [mk(4, "b", 59)],
-    ]
-    out = tmp_path / f"ttl_{uuid.uuid4().hex[:8]}"
-    out.mkdir()
-    for i, batch in enumerate(batches):
-        sess.createDataFrame(batch, rows.schema).coalesce(1).write.parquet(
-            str(out / f"b{i}")
-        )
-    flat = tmp_path / f"ttlflat_{uuid.uuid4().hex[:8]}"
-    flat.mkdir()
-    idx = 0
-    for sub in sorted(out.iterdir()):
-        for f in sorted(sub.glob("*.parquet")):
-            f.rename(flat / f"{idx:02d}.parquet")
-            idx += 1
-    stream = file_replay_stream(sess, str(flat), rows.schema, 1)
+    stream = file_replay_stream(spark, directory, schema, 1)
     name = f"ttl_{uuid.uuid4().hex[:8]}"
     _run_to_completion(
         running_key_stats(
@@ -443,6 +451,8 @@ def test_stateful_ttl_evicts_idle_keys(spark, events_df, tmp_path):
     )
     a_final = [r for r in evicted if r["key"] == "a"][0]
     assert a_final["n_events"] == 1
+    # the still-active key must never be evicted: each batch re-arms it
+    assert not any(r["key"] == "b" for r in evicted)
 
 
 def test_checkpoint_recovery_resumes_state(spark, events_df, replay_dir, tmp_path):
@@ -667,63 +677,6 @@ def test_ohlc_stream_equals_batch(spark, events_df, replay_dir):
         .collect()
     }
     assert got == expected
-
-
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState's Python worker requires google.protobuf "
-    "(not bundled in this environment; the operator is config-complete "
-    "and this test pins it wherever protobuf is present)",
-)
-def test_transform_with_state_equals_batch(spark, events_df, replay_dir):
-    """transformWithStateInPandas (Spark 4 stateful API) running stats:
-    final update-mode emission per key equals the batch groupBy — same
-    pin as the applyInPandasWithState twin, newer state API."""
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.stateful import (
-        running_key_stats_tws,
-    )
-
-    directory, schema = replay_dir
-    stream = file_replay_stream(spark, directory, schema)
-    name = f"tws_{uuid.uuid4().hex[:8]}"
-    # transformWithState requires the RocksDB state store provider
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        _run_to_completion(running_key_stats_tws(stream), name, "update")
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    rows = spark.sql(f"SELECT * FROM {name}").collect()
-    last: dict[str, tuple] = {}
-    for r in rows:
-        prev = last.get(r["key"])
-        if prev is None or r["n_events"] > prev[0]:
-            last[r["key"]] = (r["n_events"], r["total_value"])
-    expected = {
-        r["event_type"]: (r["n"], r["total"])
-        for r in events_df.groupBy("event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total"))
-        .collect()
-    }
-    assert set(last) == set(expected)
-    for k, (n, total) in expected.items():
-        assert last[k][0] == n
-        assert last[k][1] == pytest.approx(total, rel=1e-9)
 
 
 def test_ohlc_append_late_candle_correction(spark, tmp_path):
@@ -1108,158 +1061,6 @@ def test_stateful_checkpoint_recovery_resumes_state(
     assert set(last) == set(expected)
     for k, (n, total) in expected.items():
         assert last[k][0] == n, f"{k}: resumed count {last[k][0]} != {n}"
-        assert last[k][1] == pytest.approx(total, rel=1e-9)
-
-
-def _ttl_batches_dir(sess, events_df, tmp_path):
-    """3 scripted micro-batches: key 'a' goes idle after batch 1 while
-    'b' keeps advancing the watermark past a's last activity + ttl."""
-    import datetime as _dt
-
-    rows = events_df.limit(0)
-    mk = lambda i, typ, minute: (  # noqa: E731
-        i,
-        _dt.datetime(2024, 1, 1, 12, minute, 0),
-        1,
-        typ,
-        1.0,
-    )
-    batches = [
-        [mk(1, "a", 0), mk(2, "b", 0)],
-        [mk(3, "b", 30)],
-        [mk(4, "b", 59)],
-    ]
-    flat = tmp_path / f"twsflat_{uuid.uuid4().hex[:8]}"
-    flat.mkdir()
-    out = tmp_path / f"twsb_{uuid.uuid4().hex[:8]}"
-    out.mkdir()
-    idx = 0
-    for i, batch in enumerate(batches):
-        sess.createDataFrame(batch, rows.schema).coalesce(1).write.parquet(
-            str(out / f"b{i}")
-        )
-    for sub in sorted(out.iterdir()):
-        for f in sorted(sub.glob("*.parquet")):
-            f.rename(flat / f"{idx:02d}.parquet")
-            idx += 1
-    return str(flat), rows.schema
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState's Python worker requires google.protobuf "
-    "(not bundled here; this pins TWS timer-driven TTL wherever it is)",
-)
-def test_tws_ttl_evicts_idle_keys(spark, events_df, tmp_path):
-    """transformWithState event-time TTL via registered timers: idle key
-    'a' is evicted with a final evicted=true row once the watermark
-    passes its last activity + ttl — mirror of the APWS TTL pin."""
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.stateful import (
-        running_key_stats_tws,
-    )
-
-    directory, schema = _ttl_batches_dir(
-        events_df.sparkSession, events_df, tmp_path
-    )
-    stream = file_replay_stream(spark, directory, schema, 1)
-    name = f"twsttl_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        _run_to_completion(
-            running_key_stats_tws(
-                stream, watermark="0 seconds", ttl_ms=5 * 60 * 1000
-            ),
-            name,
-            "update",
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-    emitted = spark.sql(f"SELECT * FROM {name}").collect()
-    evicted = [r for r in emitted if r["evicted"]]
-    assert any(r["key"] == "a" for r in evicted)
-    a_final = [r for r in evicted if r["key"] == "a"][0]
-    assert a_final["n_events"] == 1
-    # the active key must NOT be evicted by a stale (un-rearmed) timer
-    assert not any(r["key"] == "b" for r in evicted)
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState's Python worker requires google.protobuf "
-    "(not bundled here; this pins TWS checkpoint recovery wherever it is)",
-)
-def test_tws_checkpoint_recovery_resumes_state(
-    spark, events_df, replay_dir, tmp_path
-):
-    """transformWithState killed mid-stream and restarted from its
-    checkpoint resumes the per-key running stats — TWS mirror of the
-    APWS recovery pin above."""
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.stateful import (
-        running_key_stats_tws,
-    )
-
-    directory, schema = replay_dir
-    ckpt = str(tmp_path / f"twsckpt_{uuid.uuid4().hex[:8]}")
-    last: dict = {}
-
-    def capture(bdf, bid):
-        for r in bdf.collect():
-            prev = last.get(r["key"])
-            if prev is None or r["n_events"] > prev[0]:
-                last[r["key"]] = (r["n_events"], r["total_value"])
-
-    prev_conf = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
-    def start():
-        stream = file_replay_stream(spark, directory, schema)
-        return (
-            running_key_stats_tws(stream)
-            .writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(capture)
-        )
-
-    try:
-        q = start().trigger(processingTime="0 seconds").start()
-        while len(q.recentProgress) < 2:
-            import time as _t
-
-            _t.sleep(0.2)
-        q.stop()
-        q2 = start().trigger(availableNow=True).start()
-        q2.awaitTermination()
-    finally:
-        if prev_conf is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_conf
-            )
-
-    expected = {
-        r["event_type"]: (r["n"], r["total"])
-        for r in events_df.groupBy("event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total"))
-        .collect()
-    }
-    assert set(last) == set(expected)
-    for k, (n, total) in expected.items():
-        assert last[k][0] == n
         assert last[k][1] == pytest.approx(total, rel=1e-9)
 
 

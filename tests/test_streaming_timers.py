@@ -1,16 +1,9 @@
 """Event-time timer streaming: churn-complete growth accounting.
 
-Round-6 advisory item 4: churn is the observation of ABSENCE, which
-only a timer/timeout sweep can emit. Two backends close the declared
-batch/stream asymmetry of ``growth_flows_stream``:
-
-- ``growth_flows_churn_stream`` — ``applyInPandasWithState`` +
-  ``GroupStateTimeout.EventTimeTimeout`` (runs everywhere pyspark
-  runs; the certified path in this environment).
-- ``growth_flows_timer_stream`` — Spark 4
-  ``transformWithStateInPandas`` event-time timers (needs the RocksDB
-  provider AND ``google.protobuf`` for its state-server protocol;
-  skipped here with the named reason from ``timer_backend_available``).
+Churn is the observation of ABSENCE, which only a timeout sweep can
+emit. ``growth_flows_churn_stream`` (``applyInPandasWithState`` +
+``GroupStateTimeout.EventTimeTimeout``) closes the declared
+batch/stream asymmetry of ``growth_flows_stream``.
 
 These tests replay multi-day fixtures and pin row-for-row parity with
 the batch lag()/lead() classification INCLUDING churn rows.
@@ -20,7 +13,6 @@ from __future__ import annotations
 
 import uuid
 
-import pytest
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -32,53 +24,7 @@ from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event
 )
 from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.stateful import (
     growth_flows_churn_stream,
-    growth_flows_timer_stream,
-    timer_backend_available,
 )
-
-ROCKSDB = (
-    "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider"
-)
-
-_TIMER_OK, _TIMER_SKIP_REASON = timer_backend_available()
-
-BACKENDS = [
-    pytest.param(growth_flows_churn_stream, False, id="event_time_timeout"),
-    pytest.param(
-        growth_flows_timer_stream,
-        True,
-        id="transform_with_state",
-        marks=pytest.mark.skipif(
-            not _TIMER_OK, reason=_TIMER_SKIP_REASON
-        ),
-    ),
-]
-
-
-@pytest.fixture()
-def scoped_rocksdb(spark):
-    """transformWithState requires the RocksDB provider; scope it to the
-    test so the shared session's default provider is untouched."""
-
-    def _set():
-        key = "spark.sql.streaming.stateStore.providerClass"
-        prior = spark.conf.get(key, None)
-        spark.conf.set(key, ROCKSDB)
-        return lambda: (
-            spark.conf.unset(key)
-            if prior is None
-            else spark.conf.set(key, prior)
-        )
-
-    restores = []
-
-    def apply():
-        restores.append(_set())
-
-    yield apply
-    for restore in restores:
-        restore()
 
 
 def _batch_flows_with_churn(ev):
@@ -120,12 +66,10 @@ def _batch_flows_with_churn(ev):
     return active, churn
 
 
-def _run_stream(spark, impl, needs_rocksdb, scoped_rocksdb, stream, ckpt):
-    if needs_rocksdb:
-        scoped_rocksdb()
+def _run_stream(spark, stream, ckpt):
     name = f"growth_timer_{uuid.uuid4().hex[:8]}"
     q = (
-        impl(stream)
+        growth_flows_churn_stream(stream)
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("update")
@@ -142,10 +86,7 @@ def _run_stream(spark, impl, needs_rocksdb, scoped_rocksdb, stream, ckpt):
     }
 
 
-@pytest.mark.parametrize("impl,needs_rocksdb", BACKENDS)
-def test_timer_stream_matches_batch_including_churn(
-    spark, sf_dir, tmp_path, scoped_rocksdb, impl, needs_rocksdb
-):
+def test_timer_stream_matches_batch_including_churn(spark, sf_dir, tmp_path):
     """Multi-day in-order replay + a far-future sentinel event (to push
     the watermark past every churn window): the timer stream's flows
     equal the batch classification EXACTLY, churn included."""
@@ -188,9 +129,7 @@ def test_timer_stream_matches_batch_including_churn(
         n += 1
 
     stream = file_replay_stream(spark, str(flat), ev.schema)
-    got = _run_stream(
-        spark, impl, needs_rocksdb, scoped_rocksdb, stream, tmp_path / "ckpt"
-    )
+    got = _run_stream(spark, stream, tmp_path / "ckpt")
     got = {g for g in got if g[0] != -1}
 
     active, churn = _batch_flows_with_churn(ev)
@@ -202,10 +141,7 @@ def test_timer_stream_matches_batch_including_churn(
     assert churn  # non-degenerate: the fixture really has churners
 
 
-@pytest.mark.parametrize("impl,needs_rocksdb", BACKENDS)
-def test_timer_does_not_fire_for_retained_user(
-    spark, tmp_path, scoped_rocksdb, impl, needs_rocksdb
-):
+def test_timer_does_not_fire_for_retained_user(spark, tmp_path):
     """A user active every single day never emits churn DURING the
     active run — re-arming replaces the stale watch — and churns
     exactly once, the day after activity ends (the batch lead()-IS-NULL
@@ -239,9 +175,7 @@ def test_timer_does_not_fire_for_retained_user(
     stream = file_replay_stream(
         spark, str(flat), spark.createDataFrame([], schema).schema
     )
-    got = _run_stream(
-        spark, impl, needs_rocksdb, scoped_rocksdb, stream, tmp_path / "ckpt2"
-    )
+    got = _run_stream(spark, stream, tmp_path / "ckpt2")
     day0 = int(base.timestamp()) // 86400
     u1 = {(d - day0, f) for (u, d, f) in got if u == 1}
     assert u1 == {
@@ -319,14 +253,3 @@ def test_churn_then_comeback_is_resurrected_not_new(spark, tmp_path):
     ]
     assert rows.count((2, "churned")) == 1  # no double-emit
 
-
-def test_timer_backend_gate_names_its_reason():
-    """The gate is observable: when protobuf is missing the reason names
-    the missing dependency and the certified substitute, mirroring the
-    Kafka connector gate."""
-    ok, reason = timer_backend_available()
-    if ok:
-        assert reason == ""
-    else:
-        assert "google.protobuf" in reason
-        assert "growth_flows_churn_stream" in reason
